@@ -381,8 +381,18 @@ class ManifestTable(ParquetTable):
     def commit_replace_partitions(self, staged: dict) -> list[str]:
         """COMMIT half: one manifest PUT re-pointing the touched leaves at
         the staged generation (driver-side only — no Spark job, no rename
-        of any data path)."""
+        of any data path).
+
+        No other commit may land on this table between the stage and this
+        commit: its GC deletes the still-unreferenced staged generation.
+        A vanished generation raises ``FileNotFoundError`` rather than
+        publishing a manifest that silently drops the staged batch."""
         gen, gen_dir = staged["gen"], staged["gen_dir"]
+        if not os.path.isdir(gen_dir):
+            raise FileNotFoundError(
+                f"{self.path}: staged generation {gen} no longer exists — "
+                "another commit landed on the table after the stage"
+            )
         m = self._load_manifest() or {"seq": 0, "parts": {}, "meta": None}
         seq = m["seq"] + 1
         touched = [r for r in self._written_parts(gen_dir) if r]

@@ -21,6 +21,7 @@ Scale notes (100 TB posture):
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from functools import reduce
 
@@ -57,11 +58,11 @@ class LedgerSpec:
     bucket directory atomically, a bucket's data and its ledger move
     together — a crash mid-swap leaves every bucket either fully applied
     (ledger advanced) or fully unapplied (ledger stale), and the replay
-    re-folds ONLY the unapplied buckets. This upgrades the whole-table
-    sinks' documented at-least-once edge (a crash between table swap and
-    checkpoint commit re-adds one batch) to exactly-once per bucket.
+    re-folds ONLY the unapplied buckets: exactly-once per bucket, even
+    across a crash between the table swap and the checkpoint commit.
 
-    Readers must exclude sentinel rows (the sinks' accessor methods do).
+    The table's logical read (``ParquetTable.read``) excludes sentinel rows
+    using the spec recorded in the table metadata.
     """
 
     sentinel: object
@@ -97,11 +98,69 @@ class StagedScopedMerge:
         self.table.abort_replace_partitions(self.staged)
 
 
+def stage_and_commit(spark: SparkSession, *merges: dict) -> None:
+    """Fold one trigger into several tables: stage every
+    ``merge_upsert_scoped(spark, **m, stage_only=True)`` concurrently
+    (the write jobs overlap), then commit them in the order
+    given — the order a sink's crash contract is stated in. If any stage
+    fails, every stage that succeeded is aborted and the first failure
+    (in the given order) is re-raised, so nothing lands.
+
+    No other commit may land on any of these tables between its stage and
+    its commit: a ``ManifestTable`` commit collects the unreferenced
+    staged generation, and the later commit then raises instead of
+    publishing it."""
+    with ThreadPoolExecutor(max_workers=len(merges)) as ex:
+        futures = [
+            ex.submit(merge_upsert_scoped, spark, stage_only=True, **m)
+            for m in merges
+        ]
+        staged, errors = [], []
+        for f in futures:
+            try:
+                staged.append(f.result())
+            except Exception as e:  # noqa: BLE001 — re-raised below
+                errors.append(e)
+    if errors:
+        for st in staged:
+            st.abort()
+        raise errors[0]
+    for st in staged:
+        st.commit()
+
+
 def part_expr(key: str, n_buckets: int) -> F.Column:
     """Deterministic key -> partition bucket. Derived from the merge key
     itself, so a key always lands in the same hive partition; NULL keys hash
     to the seed (one fixed bucket)."""
     return F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+
+
+def adopt_scoped_layout(table) -> None:
+    """Give a streaming state table the one layout every sink folds
+    through: hash buckets under ``PART_COL``. An unbucketed table is the
+    1-bucket case; a path already holding a scoped table (a restart that
+    re-wraps it in a plain ``ParquetTable(path)``) adopts its stored
+    modulus. Flat data without bucket metadata, or a table partitioned by
+    other columns, cannot be folded by bucket and raises."""
+    if table.partition_by == [PART_COL]:
+        return
+    if table.partition_by:
+        raise ValueError(
+            f"{table.path}: partitioned by {table.partition_by}; streaming "
+            f"state tables are bucketed by {PART_COL} only"
+        )
+    meta = table.read_meta()
+    if meta and "n_buckets" in meta:
+        table.n_buckets = int(meta["n_buckets"])
+    elif table.exists():
+        raise ValueError(
+            f"{table.path}: holds unbucketed data with no bucket metadata; "
+            "rebuild it as a scoped table (merge_upsert_scoped) first"
+        )
+    else:
+        table.n_buckets = 1
+    table.partition_by = [PART_COL]
 
 
 def _flagged_outer_join(
@@ -407,10 +466,11 @@ def merge_upsert_scoped(
     either overwritten by a matched source row or provably absent from
     the source only when it must not survive. Under that contract the
     full-outer MERGE is equivalent to: drop the target rows whose scope
-    key appears in ``replace_keys`` (a BROADCAST anti-join — micro-batch
-    key sets are small by the streaming contract, and the pruned target
-    is then never shuffled or sorted, where the full-outer join forced a
-    sort-merge join on the composite key), then union the source in.
+    key appears in ``replace_keys`` (a NULL-safe BROADCAST anti-join —
+    micro-batch key sets are small by the streaming contract, and the
+    pruned target is then never shuffled or sorted, where the full-outer
+    join forced a sort-merge join on the composite key), then union the
+    source in.
     Incompatible with ``preserve``/``dedupe_order``/``set_on_*``/
     ``merge_exprs``/``ledger``/``evolve_schema`` (those give matched rows
     semantics beyond "source wins" — asserted).
@@ -508,6 +568,14 @@ def merge_upsert_scoped(
                         if table.schema is not None
                         else [c for c in source.columns]
                     )
+                    # a declared schema only narrows the read surface: a
+                    # sink's internal physical columns (SCD2 hwm marks)
+                    # are still table data to the merge
+                    data_cols += [
+                        c
+                        for c in base.columns
+                        if c not in data_cols and c != PART_COL
+                    ]
             tgt = (
                 base
                 .filter(F.col(PART_COL).isin(parts))
@@ -543,10 +611,21 @@ def merge_upsert_scoped(
                     f"merge_upsert_scoped(replace_keys=...) requires aligned "
                     f"schemas; target={tgt.columns} source={src.columns}"
                 )
+                # NULL-safe like merge_upsert's key match: a NULL scope
+                # key must drop its stored rows, not survive beside the
+                # source's replacements
+                rk = replace_keys.select(
+                    *[F.col(c).alias(f"__rk_{c}") for c in replace_keys.columns]
+                )
+                cond = reduce(
+                    lambda x, y: x & y,
+                    [
+                        F.col(c).eqNullSafe(F.col(f"__rk_{c}"))
+                        for c in replace_keys.columns
+                    ],
+                )
                 merged = tgt.join(
-                    F.broadcast(replace_keys),
-                    list(replace_keys.columns),
-                    "left_anti",
+                    F.broadcast(rk), cond, "left_anti"
                 ).unionByName(src)
             else:
                 merged = merge_upsert(

@@ -21,6 +21,7 @@ import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 #: table-level metadata file, stored INSIDE the table root. Underscore-prefixed
@@ -227,7 +228,14 @@ class ParquetTable:
         column of a scoped-merge layout (``partition_by ==
         [merge.PART_COL]``) is dropped — it is a physical detail, not
         table data. Real partition columns (client_id, load_date, ...)
-        are data and stay."""
+        are data and stay. Replay-ledger sentinel rows recorded in the
+        metadata (``merge.LedgerSpec``) are bookkeeping too and are
+        filtered out."""
+        meta = self.read_meta()
+        if meta and "ledger_sentinel" in meta:
+            df = df.filter(
+                ~F.col(meta["keys"][0]).eqNullSafe(F.lit(meta["ledger_sentinel"]))
+            )
         if self.schema is not None:
             return df.select(*[f.name for f in self.schema.fields])
         from .merge import PART_COL  # local: avoids an import cycle
@@ -478,41 +486,6 @@ class ParquetTable:
             .parquet(self.path)
         )
         df.sparkSession.catalog.refreshByPath(self.path)
-
-
-class BucketedTable:
-    """Catalog-backed parquet table bucketed (and sorted) by join/merge keys.
-
-    Bucketing pre-shuffles data at write time: a join or aggregation on the
-    bucket keys between two tables with compatible bucket counts runs with
-    ZERO exchanges (verified in tests/test_bucketing.py via explain). This is
-    the 100 TB seam for the canonical tables: CAN_TXN bucketed by
-    canonical_txn_id makes every incremental MERGE scan-side shuffle-free —
-    only the (small) source batch shuffles.
-
-    Uses the session catalog (``saveAsTable``) because bucket metadata lives
-    in the catalog, not in parquet files; plain-path tables can't carry it.
-    """
-
-    def __init__(self, name: str, bucket_cols: Sequence[str], num_buckets: int = 16):
-        self.name = name
-        self.bucket_cols = list(bucket_cols)
-        self.num_buckets = num_buckets
-
-    def exists(self, spark: SparkSession) -> bool:
-        return spark.catalog.tableExists(self.name)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return spark.table(self.name)
-
-    def overwrite(self, df: DataFrame) -> None:
-        (
-            df.write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(self.num_buckets, *self.bucket_cols)
-            .sortBy(*self.bucket_cols)
-            .saveAsTable(self.name)
-        )
 
 
 def vacuum(table: ParquetTable, min_age_seconds: float = 24 * 3600) -> list[str]:

@@ -129,9 +129,8 @@ class FullCanonicalSink:
             else F.current_timestamp()
         )
 
-        # Each table merges through MergeSink — it picks the partition-
-        # scoped merge for hash-bucketed tables and the plain full-outer
-        # merge otherwise, exactly like the single-table streaming sinks.
+        # Each table merges through MergeSink's partition-scoped merge, in
+        # sequence: stage 06 must read the post-merge CAN_TXN.
         stg_header = transform_headers(*args).cache()
         hdr_source = (
             stg_header.filter(F.col("rn") == 1)

@@ -14,10 +14,16 @@ maintenance loop a warehouse runs continuously). Per micro-batch:
    lag-collapse, so a REPLAYED micro-batch after a restart recomputes the
    identical versions (idempotent, pytest-proven across a checkpoint
    restart);
-4. fold back with ``merge_upsert`` keyed on (key, version_n). Version
-   counts are monotone non-decreasing under re-collapse (adjacent versions
-   differ by construction, so inserting events can only split runs, never
-   merge them) — stale version rows cannot linger.
+4. fold back with ``merge_upsert_scoped`` keyed on (key, version_n),
+   rewriting only the affected keys' buckets (the table is hash-bucketed
+   on the key — ``merge.adopt_scoped_layout``; a table handed over
+   without a layout is the 1-bucket case). Version counts are monotone
+   non-decreasing under re-collapse (adjacent versions differ by
+   construction, so inserting events can only split runs, never merge
+   them) — stale version rows cannot linger.
+
+A NULL business key is one key, exactly as ``scd2_build`` groups it:
+every key match in the fold is NULL-safe.
 
 Late-data caveat: versions are COLLAPSED runs; an event older than the
 key's current version boundary re-orders correctly against version *start*
@@ -45,8 +51,8 @@ from pyspark.sql import types as T
 
 from ..operators.merge import (
     PART_COL,
+    adopt_scoped_layout,
     maybe_rebucket,
-    merge_upsert,
     merge_upsert_scoped,
     part_expr,
 )
@@ -106,12 +112,13 @@ class Scd2Sink:
         evolve_schema: bool = False,
         rebuild_policy: RebuildPolicy | None = None,
     ):
+        adopt_scoped_layout(table)
         self.table = table
         self.key_col = key_col
         self.state_col = state_col
         self.ts_col = ts_col
         self.seq_col = seq_col
-        # auto-split the bucketed version table past this mean bucket size
+        # auto-split the version table past this mean bucket size
         # (merge.maybe_rebucket) — keeps per-trigger I/O batch-proportional
         # as the dimension grows without bound
         self.rebucket_target_bytes = rebucket_target_bytes
@@ -136,6 +143,17 @@ class Scd2Sink:
             F.col(self.seq_col).alias("s"),
         )
 
+    def _key_join(
+        self, left: DataFrame, right: DataFrame, how: str = "inner"
+    ) -> DataFrame:
+        """Join on the business key NULL-safely (a NULL key's stored
+        versions, marks and batch events must meet like any other key's)."""
+        k = self.key_col
+        right = right.withColumnRenamed(k, "__k")
+        return left.join(right, F.col(k).eqNullSafe(F.col("__k")), how).drop(
+            "__k"
+        )
+
     def _as_events(self, versions: DataFrame) -> DataFrame:
         return versions.select(
             F.col(self.key_col),
@@ -146,7 +164,6 @@ class Scd2Sink:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        scoped = self.table.partition_by == [PART_COL]
         events = batch_df.select(
             self.key_col, self.state_col, self.ts_col, self.seq_col
         )
@@ -175,24 +192,19 @@ class Scd2Sink:
             )
             target = self.table.scan(spark, stored=stored)
             affected = events.select(self.key_col).distinct()
-            if scoped:
-                # bucket-prune the version read to the batch keys' buckets
-                # (same part_expr the table is laid out with), THEN key-join
-                # — the dimension scan never leaves the batch's footprint
-                n = meta["n_buckets"]
-                parts = [
-                    r[0]
-                    for r in affected.select(
-                        part_expr(self.key_col, n).alias("p")
-                    )
-                    .distinct()
-                    .collect()
-                ]
-                target = target.filter(F.col(PART_COL).isin(parts)).drop(
-                    PART_COL
-                )
+            # bucket-prune the version read to the batch keys' buckets
+            # (same part_expr the table is laid out with), THEN key-join —
+            # the dimension scan never leaves the batch's footprint
+            n = meta["n_buckets"]
+            parts = [
+                r[0]
+                for r in affected.select(part_expr(self.key_col, n).alias("p"))
+                .distinct()
+                .collect()
+            ]
+            target = target.filter(F.col(PART_COL).isin(parts)).drop(PART_COL)
             tgt_cols = set(target.columns)
-            touched = target.join(affected, self.key_col)  # batch-sized
+            touched = self._key_join(target, affected)  # batch-sized
             if track_hwm:
                 # out-of-order probe against the stored per-key high-water
                 # mark (RebuildPolicy docstring: the version boundary alone
@@ -220,15 +232,15 @@ class Scd2Sink:
                 # collapses away idempotently — replays must not pay for
                 # a rebuild
                 late_detected = bool(
-                    events.join(stored_hwm, self.key_col)
+                    self._key_join(events, stored_hwm)
                     .filter(self._event_pos() < F.col("__sh"))
                     .limit(1)
                     .count()
                 )
                 if not has_hwm:
                     # first policy fold over a pre-policy table: widen it
-                    # in place (scoped merges evolve via the recorded
-                    # union schema; whole-table merges union the frames)
+                    # in place (the merge evolves via the recorded union
+                    # schema)
                     evolve = True
             recomputed_src = self._as_events(touched).unionByName(events)
         recomputed = scd2_build(
@@ -248,7 +260,7 @@ class Scd2Sink:
                 F.max(self._event_pos()).alias("__bh")
             )
             if stored_hwm is not None:
-                hw = batch_hwm.join(stored_hwm, self.key_col, "left").select(
+                hw = self._key_join(batch_hwm, stored_hwm, "left").select(
                     self.key_col,
                     F.when(
                         F.col("__sh").isNull()
@@ -263,66 +275,49 @@ class Scd2Sink:
                     self.key_col, F.col("__bh").alias("__h")
                 )
             recomputed = (
-                recomputed.join(hw, self.key_col)
+                self._key_join(recomputed, hw)
                 .withColumn("hwm_us", F.col("__h.u"))
                 .withColumn("hwm_seq", F.col("__h.s"))
                 .drop("__h")
             )
-        if scoped:
-            # keyed upsert (idempotent re-collapse — replay-safe); only the
-            # affected keys' buckets are rewritten. The recomputed versions
-            # carry exactly the affected keys, whose buckets were already
-            # collected above — pass them through so the merge skips its
-            # own touched-bucket action AND the source persist (r12: the
-            # bucketed live drain paid two extra driver actions a trigger).
-            #
-            # replace_keys fast path (r16): ``recomputed`` is by
-            # construction the COMPLETE re-collapsed version set for
-            # exactly the affected keys, and version counts are monotone
-            # non-decreasing under re-collapse (module docstring point 4),
-            # so no stale higher-version target row can exist outside the
-            # source — the full-outer MERGE on (key, version_n), which
-            # Spark can only run as a sort-merge join, is equivalent to
-            # dropping the affected keys' rows (broadcast anti-join on the
-            # batch's key set — the pruned dimension scan is never
-            # shuffled or sorted) and unioning the re-collapse in. Only
-            # taken when the target's physical schema already matches the
-            # recomputed frame (an evolving fold — first policy trigger,
-            # or a widened table folded without hwm tracking — keeps the
-            # schema-reconciling MERGE semantics).
-            rk = None
-            if (
-                not evolve
-                and tgt_cols is not None
-                and tgt_cols == set(recomputed.columns)
-            ):
-                rk = affected
-            merge_upsert_scoped(
-                spark,
-                self.table,
-                recomputed,
-                keys=[self.key_col, "version_n"],
-                parts=parts,
-                evolve_schema=evolve,
-                replace_keys=rk,
-            )
-            if self.rebucket_target_bytes is not None:
-                maybe_rebucket(spark, self.table, self.rebucket_target_bytes)
-            self._maybe_scheduled_rebuild(spark, late_detected)
-            return
-        if self.table.exists():
-            # merge against the FULL physical schema (scan), not read()'s
-            # declared-schema projection — a whole-table rewrite from a
-            # projected target would erase the hwm columns permanently
-            merged = merge_upsert(
-                self.table.scan(spark),
-                recomputed,
-                keys=[self.key_col, "version_n"],
-                evolve_schema=evolve,
-            )
-        else:
-            merged = recomputed
-        self.table.overwrite_atomic(merged)
+        # keyed upsert (idempotent re-collapse — replay-safe); only the
+        # affected keys' buckets are rewritten. The recomputed versions
+        # carry exactly the affected keys, whose buckets were already
+        # collected above — pass them through so the merge skips its own
+        # touched-bucket action AND the source persist (r12: the bucketed
+        # live drain paid two extra driver actions a trigger).
+        #
+        # replace_keys fast path (r16): ``recomputed`` is by construction
+        # the COMPLETE re-collapsed version set for exactly the affected
+        # keys, and version counts are monotone non-decreasing under
+        # re-collapse (module docstring point 4), so no stale
+        # higher-version target row can exist outside the source — the
+        # full-outer MERGE on (key, version_n), which Spark can only run as
+        # a sort-merge join, is equivalent to dropping the affected keys'
+        # rows (NULL-safe broadcast anti-join on the batch's key set — the
+        # pruned dimension scan is never shuffled or sorted) and unioning
+        # the re-collapse in. Only taken when the target's physical schema
+        # already matches the recomputed frame (an evolving fold — first
+        # policy trigger, or a widened table folded without hwm tracking —
+        # keeps the schema-reconciling MERGE semantics).
+        rk = None
+        if (
+            not evolve
+            and tgt_cols is not None
+            and tgt_cols == set(recomputed.columns)
+        ):
+            rk = affected
+        merge_upsert_scoped(
+            spark,
+            self.table,
+            recomputed,
+            keys=[self.key_col, "version_n"],
+            parts=parts,
+            evolve_schema=evolve,
+            replace_keys=rk,
+        )
+        if self.rebucket_target_bytes is not None:
+            maybe_rebucket(spark, self.table, self.rebucket_target_bytes)
         self._maybe_scheduled_rebuild(spark, late_detected)
 
     def _maybe_scheduled_rebuild(self, spark: SparkSession, late: bool) -> None:
@@ -374,33 +369,30 @@ class Scd2Sink:
                 F.max(self._event_pos()).alias("__h")
             )
             rebuilt = (
-                rebuilt.join(hw, self.key_col)
+                self._key_join(rebuilt, hw)
                 .withColumn("hwm_us", F.col("__h.u"))
                 .withColumn("hwm_seq", F.col("__h.s"))
                 .drop("__h")
             )
-        if self.table.partition_by == [PART_COL]:
-            # a rebuild rewrites everything by definition; re-derive the
-            # bucket layout so subsequent scoped folds keep pruning
-            meta = self.table.read_meta()
-            n = meta["n_buckets"] if meta else self.table.n_buckets
-            rebuilt = rebuilt.withColumn(
-                PART_COL, part_expr(self.key_col, n)
-            ).repartition(n, F.col(PART_COL))
-            self.table.overwrite_atomic(rebuilt)
-            # merge-preserving: overwrite_atomic just recorded the rewrite's
-            # measured total_bytes (and carried any evolved schema_json) —
-            # re-stamping the layout keys must not drop them
-            self.table.write_meta(
-                **{
-                    **(self.table.read_meta() or {}),
-                    "n_buckets": n,
-                    "part_col": PART_COL,
-                    "keys": [self.key_col, "version_n"],
-                }
-            )
-            return
+        # a rebuild rewrites everything by definition; re-derive the bucket
+        # layout so subsequent scoped folds keep pruning
+        meta = self.table.read_meta()
+        n = meta["n_buckets"] if meta else self.table.n_buckets
+        rebuilt = rebuilt.withColumn(
+            PART_COL, part_expr(self.key_col, n)
+        ).repartition(n, F.col(PART_COL))
         self.table.overwrite_atomic(rebuilt)
+        # merge-preserving: overwrite_atomic just recorded the rewrite's
+        # measured total_bytes (and carried any evolved schema_json) —
+        # re-stamping the layout keys must not drop them
+        self.table.write_meta(
+            **{
+                **(self.table.read_meta() or {}),
+                "n_buckets": n,
+                "part_col": PART_COL,
+                "keys": [self.key_col, "version_n"],
+            }
+        )
 
 
 def rebuild_scd2(

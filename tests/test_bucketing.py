@@ -1,83 +1,14 @@
-"""Bucketed-table co-located joins: writing both sides bucketed by the join
-key must eliminate every shuffle from the join plan (SURVEY.md §4 physical
-design; the scale seam for canonical-table merges)."""
+"""Table maintenance on the plain parquet layout: compaction of small
+appended files, snapshot retention (time travel) and vacuum of abandoned
+generations."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from financial_data_ingestion_canonical_snowflake_spark.operators.storage import BucketedTable
 from financial_data_ingestion_canonical_snowflake_spark.plans.registry import table
 
 from .conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def bucketed(spark):
-    o = table(spark, SF_SMOKE, "orders").select("o_orderkey", "o_totalprice")
-    li = table(spark, SF_SMOKE, "lineitem").select("l_orderkey", "l_extendedprice")
-    bo = BucketedTable("bkt_orders", ["o_orderkey"], 8)
-    bl = BucketedTable("bkt_lineitem", ["l_orderkey"], 8)
-    bo.overwrite(o)
-    bl.overwrite(li)
-    yield bo, bl
-    spark.sql("DROP TABLE IF EXISTS bkt_orders")
-    spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
-
-
-def _exchanges(df) -> int:
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return sum(
-        line.count("Exchange") - line.count("BroadcastExchange")
-        for line in plan.splitlines()
-    )
-
-
-def test_bucketed_join_has_no_shuffle(spark, bucketed):
-    bo, bl = bucketed
-    # disable broadcast so the join must pick SMJ; bucketing then removes
-    # both exchanges entirely
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        joined = bl.read(spark).join(
-            bo.read(spark),
-            bl.read(spark).l_orderkey == bo.read(spark).o_orderkey,
-        )
-        assert _exchanges(joined) == 0, "bucketed join must not shuffle"
-
-        # same join from raw (unbucketed) parquet shuffles both sides
-        o = table(spark, SF_SMOKE, "orders").select("o_orderkey")
-        li = table(spark, SF_SMOKE, "lineitem").select("l_orderkey")
-        plain = li.join(o, li.l_orderkey == o.o_orderkey)
-        assert _exchanges(plain) >= 2
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-
-
-def test_bucketed_join_results_correct(spark, bucketed):
-    bo, bl = bucketed
-    got = (
-        bl.read(spark)
-        .join(bo.read(spark), bl.read(spark).l_orderkey == bo.read(spark).o_orderkey)
-        .count()
-    )
-    o = table(spark, SF_SMOKE, "orders")
-    li = table(spark, SF_SMOKE, "lineitem")
-    want = li.join(o, li.l_orderkey == o.o_orderkey).count()
-    assert got == want
-
-
-def test_bucketed_groupby_has_no_shuffle(spark, bucketed):
-    _, bl = bucketed
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        agg = bl.read(spark).groupBy("l_orderkey").agg(F.sum("l_extendedprice"))
-        assert _exchanges(agg) == 0, "groupBy on bucket key must not shuffle"
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
 def test_compact_small_files(spark, tmp_path):

@@ -581,3 +581,18 @@ def test_crash_matrix_every_put_point(spark, tmp_path):
                 for rel in t._written_parts(gd):
                     on_disk.add(os.path.join(gen, rel) if rel else gen)
         assert on_disk == live, f"crash at PUT {crash_at}: orphans survive vacuum"
+
+
+def test_commit_raises_when_staged_generation_was_collected(spark, tmp_path):
+    """A commit landing between stage and commit garbage-collects the
+    unreferenced staged generation; the later commit must raise instead
+    of publishing a manifest that silently drops the staged batch."""
+    t = ManifestTable(str(tmp_path / "m"), SCHEMA, [PART_COL], n_buckets=8)
+    merge_upsert_scoped(spark, t, _df(spark, [("a", 1, "s1")]), keys=["k"])
+    staged = merge_upsert_scoped(
+        spark, t, _df(spark, [("b", 2, "s2")]), keys=["k"], stage_only=True
+    )
+    t.append(_df(spark, [("c", 3, "s3")]).withColumn(PART_COL, F.lit(0)))
+    with pytest.raises(FileNotFoundError, match="staged generation"):
+        staged.commit()
+    assert sorted(r["k"] for r in t.read(spark).collect()) == ["a", "c"]

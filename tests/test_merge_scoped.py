@@ -18,9 +18,11 @@ from pyspark.sql import types as T
 
 from financial_data_ingestion_canonical_snowflake_spark.operators.merge import (
     PART_COL,
+    adopt_scoped_layout,
     merge_upsert,
     merge_upsert_scoped,
     part_expr,
+    stage_and_commit,
 )
 from financial_data_ingestion_canonical_snowflake_spark.operators.storage import ParquetTable
 
@@ -339,3 +341,61 @@ def test_replace_keys_equals_merge(spark, table):
             preserve=["payload"],
             replace_keys=src.select("k").distinct(),
         )
+
+
+def test_adopt_scoped_layout(spark, tmp_path):
+    """Streaming state tables have one layout: an unbucketed table is the
+    1-bucket scoped table, a re-wrapped scoped path keeps its stored
+    modulus, and anything that cannot be folded by bucket fails at
+    construction instead of mid-merge."""
+    fresh = ParquetTable(str(tmp_path / "fresh"))
+    adopt_scoped_layout(fresh)
+    assert (fresh.partition_by, fresh.n_buckets) == ([PART_COL], 1)
+
+    scoped = ParquetTable(str(tmp_path / "scoped"), SCHEMA, [PART_COL], 8)
+    merge_upsert_scoped(spark, scoped, _df(spark, [("a", 1, "s1")]), keys=["k"])
+    rewrapped = ParquetTable(scoped.path)  # a restart's plain re-wrap
+    adopt_scoped_layout(rewrapped)
+    assert (rewrapped.partition_by, rewrapped.n_buckets) == ([PART_COL], 8)
+    assert sorted(map(tuple, rewrapped.read(spark).collect())) == [
+        ("a", 1, "s1")
+    ]
+
+    flat = ParquetTable(str(tmp_path / "flat"))
+    flat.overwrite_atomic(_df(spark, [("a", 1, "s1")]))
+    with pytest.raises(ValueError, match="no bucket metadata"):
+        adopt_scoped_layout(flat)
+    with pytest.raises(ValueError, match="partitioned by"):
+        adopt_scoped_layout(ParquetTable(str(tmp_path / "p"), partition_by=["k"]))
+
+
+def test_stage_and_commit_aborts_every_stage_on_failure(spark, tmp_path):
+    """One failed stage lands nothing: the stages that succeeded are
+    aborted (no staged files left behind) and the first error re-raises;
+    without a failure every merge commits."""
+    a = ParquetTable(str(tmp_path / "a"), SCHEMA, [PART_COL], n_buckets=4)
+    b = ParquetTable(str(tmp_path / "b"), SCHEMA, [PART_COL], n_buckets=4)
+    for t in (a, b):
+        merge_upsert_scoped(spark, t, _df(spark, [("a", 1, "s1")]), keys=["k"])
+    before = {t.path: _snapshot(t.path) for t in (a, b)}
+    upd = _df(spark, [("a", 2, "s2"), ("z", 9, "s2")])
+    misaligned = spark.createDataFrame([("x", 1)], "k string, v long")
+    with pytest.raises(AssertionError, match="aligned schemas"):
+        stage_and_commit(
+            spark,
+            dict(table=a, source=upd, keys=["k"]),
+            dict(table=b, source=misaligned, keys=["k"]),
+        )
+    assert {t.path: _snapshot(t.path) for t in (a, b)} == before
+    assert sorted(os.listdir(tmp_path)) == ["a", "b"]
+
+    stage_and_commit(
+        spark,
+        dict(table=a, source=upd, keys=["k"]),
+        dict(table=b, source=upd, keys=["k"]),
+    )
+    for t in (a, b):
+        assert {r["k"]: r["v"] for r in t.read(spark).collect()} == {
+            "a": 2,
+            "z": 9,
+        }

@@ -15,6 +15,7 @@ from financial_data_ingestion_canonical_snowflake_spark.operators.text_dedup imp
     exact_dedup,
 )
 from financial_data_ingestion_canonical_snowflake_spark.streaming.dedup_stream import (
+    ExactDedupSink,
     stream_exact_dedup,
 )
 
@@ -91,3 +92,18 @@ def test_stream_dedup_backfilled_smaller_id_becomes_survivor(spark, tmp_path):
     rows = table.read(spark).collect()
     assert len(rows) == 1
     assert rows[0]["survivor_id"] == 3 and rows[0]["dup_cnt"] == 2
+
+
+def test_exact_dedup_default_table_replay_is_exactly_once(spark, tmp_path):
+    """foreachBatch may re-deliver a batch; on a table built with no layout
+    arguments the additive dup_cnt must still fold exactly once (the
+    1-bucket table carries the per-bucket replay ledger)."""
+    sink = ExactDedupSink(
+        ParquetTable(str(tmp_path / "survivors")), "doc_id", "text"
+    )
+    batch = spark.createDataFrame(_BATCH_1, ["doc_id", "text"])
+    sink(batch, 0)
+    sink(batch, 0)  # replayed delivery
+    assert _sorted_rows(sink.survivors(spark)) == _sorted_rows(
+        exact_dedup(batch, "doc_id", "text")
+    )

@@ -5,7 +5,9 @@ restart."""
 from __future__ import annotations
 
 import datetime as dt
+from collections import Counter
 
+from financial_data_ingestion_canonical_snowflake_spark.operators.merge import PART_COL
 from financial_data_ingestion_canonical_snowflake_spark.operators.scd import scd2_build
 from financial_data_ingestion_canonical_snowflake_spark.operators.storage import (
     ParquetTable,
@@ -294,3 +296,27 @@ def test_scd2_sink_on_manifest_table(spark, tmp_path):
     first = _sorted_rows(sink.versions(spark))
     sink(b2, 1)  # replay (at-least-once crash window)
     assert _sorted_rows(sink.versions(spark)) == first
+
+
+def test_scd2_null_key_folds_without_duplicate_versions(spark, tmp_path):
+    """scd2_build groups a NULL business key like any other key. Folding
+    it across two micro-batches into a 1-bucket table must replace its
+    versions NULL-safely, not keep the stale ones beside the new."""
+    b1 = [_ev(0, None, 0, "a"), _ev(1, 1, 5, "x"), _ev(2, None, 10, "b")]
+    b2 = [_ev(3, None, 20, "c"), _ev(4, 1, 25, "y")]
+    table = ParquetTable(
+        str(tmp_path / "scd2_null"), partition_by=[PART_COL], n_buckets=1
+    )
+    sink = Scd2Sink(table, "user_id", "event_type", "ts", "event_id")
+    sink(spark.createDataFrame(b1, _SCHEMA), 0)
+    sink(spark.createDataFrame(b2, _SCHEMA), 1)
+
+    cols = ["user_id", "version_n", "state", "eff_from_us", "eff_to_us", "is_current"]
+    got = Counter(tuple(r) for r in sink.versions(spark).select(*cols).collect())
+    keys = Counter((k, v) for k, v, *_ in got.elements())
+    assert max(keys.values()) == 1, keys
+    want = scd2_build(
+        spark.createDataFrame(b1 + b2, _SCHEMA),
+        "user_id", "event_type", "ts", "event_id",
+    )
+    assert got == Counter(tuple(r) for r in want.select(*cols).collect())

@@ -8,7 +8,8 @@ rewritten — the reference's MERGE-touches-matched-rows economics
 prove, per sink:
 
 - stream == batch: the scoped-fold state equals the batch operator over
-  the ingested union (and equals the whole-table sink's state);
+  the ingested union (and equals the state of the same sink on a table
+  built without a layout, i.e. 1 bucket);
 - untouched buckets byte-identical: a trigger leaves every bucket it
   didn't touch with bit-identical files (the test_merge_scoped pattern);
 - replay safety: re-invoking with an applied batch_id changes nothing —
