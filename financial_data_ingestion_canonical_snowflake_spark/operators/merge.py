@@ -54,12 +54,12 @@ class LedgerSpec:
     don't. ``merge_upsert_scoped`` with a ledger stores, INSIDE each bucket
     partition, one sentinel row (``keys[0] == sentinel``; real keys never
     take the sentinel value) whose ``value_col`` holds the last applied
-    ``batch_id`` for that bucket. Because ``replace_partitions`` swaps each
-    bucket directory atomically, a bucket's data and its ledger move
-    together — a crash mid-swap leaves every bucket either fully applied
+    ``batch_id`` for that bucket. Because ``replace_partitions`` commits
+    the touched buckets in one manifest PUT, a bucket's data and its ledger
+    move together — a crash leaves every bucket either fully applied
     (ledger advanced) or fully unapplied (ledger stale), and the replay
     re-folds ONLY the unapplied buckets: exactly-once per bucket, even
-    across a crash between the table swap and the checkpoint commit.
+    across a crash between the table commit and the checkpoint commit.
 
     The table's logical read (``ParquetTable.read``) excludes sentinel rows
     using the spec recorded in the table metadata.
@@ -80,17 +80,16 @@ class StagedScopedMerge:
     concurrently (guide §2.6) and then apply the COMMITS in the exact
     order its crash contract requires (e.g. the CDC sink's chunks-before-
     freq fold order). ``commit()`` is driver-side only (meta write +
-    directory swaps / manifest PUT); ``abort()`` discards the staged
-    files. A staged merge that is never committed leaves only invisible
-    tmp/generation garbage for ``vacuum`` — the same story as a crash
-    mid-write before this API existed."""
+    manifest PUT); ``abort()`` discards the staged files. A staged merge
+    that is never committed leaves only an invisible generation for
+    ``vacuum`` — the same story as a crash mid-write."""
 
     table: object
     staged: dict
     meta: dict
 
     def commit(self) -> list[str]:
-        # meta BEFORE the swap — same ordering rationale as the inline path
+        # meta BEFORE the commit — same ordering rationale as the inline path
         self.table.write_meta(**self.meta)
         return self.table.commit_replace_partitions(self.staged)
 
@@ -107,8 +106,7 @@ def stage_and_commit(spark: SparkSession, *merges: dict) -> None:
     (in the given order) is re-raised, so nothing lands.
 
     No other commit may land on any of these tables between its stage and
-    its commit: a ``ManifestTable`` commit collects the unreferenced
-    staged generation, and the later commit then raises instead of
+    its commit: that commit collects the unreferenced staged generation, and the later commit then raises instead of
     publishing it."""
     with ThreadPoolExecutor(max_workers=len(merges)) as ex:
         futures = [
@@ -422,7 +420,7 @@ def merge_upsert_scoped(
     3. ``merge_upsert`` within the touched buckets (with ``merge_exprs``
        custom matched-row combiners when given — the streaming state sinks'
        additive / least / greatest folds);
-    4. swap just those partition directories (``replace_partitions``).
+    4. commit just those partitions (``replace_partitions``).
 
     A batch touching k of N buckets reads and rewrites k/N of the table. At
     100 TB with e.g. 4096 buckets, an incremental batch costs GBs, not TBs.
@@ -436,7 +434,7 @@ def merge_upsert_scoped(
     rows for applied buckets, so those buckets produce no output
     partition and ``replace_partitions`` leaves them untouched. The
     surviving buckets fold and land with their ledger row advanced in
-    the same atomic directory swap. The ledger check costs no extra
+    the same manifest PUT. The ledger check costs no extra
     driver action (r12: it was a second per-trigger collect).
 
     ``parts``: optional caller-known superset of the source's touched
@@ -547,9 +545,8 @@ def merge_upsert_scoped(
 
             stored = T.StructType.fromJson(meta0["schema_json"])
         if exists:
-            # the physical read goes through the table's scan seam so a
-            # manifest-committed layout (operators/manifest.py) plugs in;
-            # with an evolved schema the read supplies the recorded union
+            # the physical read goes through the table's scan seam; with
+            # an evolved schema the read supplies the recorded union
             # schema explicitly — old files fill the added columns with
             # typed NULLs (a footer-inferred read could pick an old file
             # and drop the new columns entirely)
@@ -694,7 +691,7 @@ def merge_upsert_scoped(
         meta = {"n_buckets": n_buckets, "part_col": PART_COL, "keys": keys}
         if meta0 and "total_bytes" in meta0:
             # carry the size tracker forward (replace_partitions applies
-            # this batch's delta after the swap) — dropping it would force
+            # this batch's delta at the commit) — dropping it would force
             # maybe_rebucket back to a full stat walk per trigger
             meta["total_bytes"] = meta0["total_bytes"]
         if ledger is not None:
@@ -711,11 +708,11 @@ def merge_upsert_scoped(
                 table.schema = evolved
         if stage_only:
             # run the write job now (so concurrent stagers overlap their
-            # executor work); the caller owns meta-write + swap ordering
+            # executor work); the caller owns meta-write + commit ordering
             return StagedScopedMerge(
                 table, table.stage_replace_partitions(merged), meta
             )
-        # meta lands BEFORE the partition swap: a crash in between leaves the
+        # meta lands BEFORE the partition commit: a crash in between leaves the
         # recorded schema wider than some files — harmless (explicit-schema
         # reads fill NULLs); the reverse order could leave mixed files with no
         # recorded union schema, breaking every subsequent footer-inferred read
@@ -788,10 +785,10 @@ def rebucket(
     every ledgered scoped merge); pass ``ledger`` only for pre-metadata
     tables.
 
-    Crash-safe like ``compact``: one atomic directory swap, with the NEW
-    modulus written inside the candidate BEFORE the swap (a crash must
-    never leave the new layout described by the old modulus — the next
-    merge would prune to wrong buckets and silently duplicate keys).
+    Crash-safe like ``compact``: one manifest PUT commits the rewritten
+    data and the NEW modulus together (a crash must never leave the new
+    layout described by the old modulus — the next merge would prune to
+    wrong buckets and silently duplicate keys).
 
     Call between triggers (foreachBatch sinks are serial per table, so
     their post-fold call site is quiesced by construction). Returns the
@@ -815,8 +812,7 @@ def rebucket(
     if ledger is None and "ledger_sentinel" in meta:
         ledger = LedgerSpec(meta["ledger_sentinel"], meta["ledger_value_col"])
     m = new_n_buckets // old_n
-    # evolved layout reads under the recorded union schema; the scan seam
-    # keeps this working on any physical layout (manifest-committed too)
+    # evolved layout reads under the recorded union schema
     df = table.scan(spark)
     if ledger is not None:
         is_led = F.col(key0).eqNullSafe(F.lit(ledger.sentinel))
@@ -909,7 +905,7 @@ def _validated_n_buckets(table, n_buckets: int, meta: dict | None = None) -> int
     """The bucket modulus is a PHYSICAL property of the table: keys map to
     hive partitions by it, so merging with a different modulus prunes to the
     WRONG buckets and silently duplicates existing keys. The modulus is
-    persisted in the table's ``_fincan_meta.json`` on every scoped merge and
+    persisted in the table metadata on every scoped merge and
     enforced here against an EXPLICIT caller claim (default-mode merges
     adopt the stored modulus before reaching this check — the table
     object's ``n_buckets`` is only the creation seed, and ``rebucket``

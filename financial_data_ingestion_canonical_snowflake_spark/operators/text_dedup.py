@@ -474,12 +474,12 @@ def _capped_postings(
     n-gram Jaccard and winnowing pair generators; the policy that picks a
     shape is documented on ``ngram_jaccard_pairs`` (``hot_key_guard``).
 
-    NULL keys: both shapes KEEP a NULL posting key (a window partition is
-    a valid NULL group; an anti-join never matches NULL against the hot
-    set) where the pre-r15 aggregate+join shape dropped it — callers'
-    keys are non-null by construction (token concatenations / hashes),
-    pinned here so a future extractor change can't silently alter
-    jaccard denominators (ADVICE r15).
+    NULL keys: both shapes treat NULL as one key group — they drop an
+    over-cap NULL group and keep one at or under the cap (a window
+    partition is a valid NULL group; the guard's anti-join matches NULL
+    against the hot set NULL-safely). Callers' keys are non-null by
+    construction (token concatenations / hashes); this is pinned so a
+    future extractor change can't make the two shapes disagree.
     """
     if hot_key_guard:
         # Skew-proof pre-drop: exact counts via hash aggregate (map-side
@@ -500,11 +500,11 @@ def _capped_postings(
             postings.groupBy(key)
             .agg(F.count(F.lit(1)).alias("__c"))
             .filter(F.col("__c") > cap)
-            .select(key)
+            .select(F.col(key).alias("__hot"))
         )
-        return postings.join(F.broadcast(hot), key, "left_anti").repartition(
-            key
-        )
+        return postings.join(
+            F.broadcast(hot), F.col(key).eqNullSafe(F.col("__hot")), "left_anti"
+        ).repartition(key)
     # window count (r15): ONE shuffle on exactly the key the pair
     # self-join needs next — extraction evaluates once with no extra
     # cache, at the cost of routing each key's full posting list through

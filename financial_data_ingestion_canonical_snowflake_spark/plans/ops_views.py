@@ -57,17 +57,21 @@ def register_views(
 
 
 def register_durable_views(
-    spark, audit_path: str, can_txn_path: str, anomaly_path: str
+    spark, audit_rel: str, can_txn_rel: str, anomaly_rel: str
 ) -> None:
     """CREATE OR REPLACE VIEW — catalog-durable twins of ``register_views``
     (reference ``sql/07_ops_views.sql:6,16,24`` creates durable view
     OBJECTS, not session temp views).
 
-    Each view is a permanent catalog object over the parquet table path, so
-    it re-reads current table state on every query. Durability across
-    restarts equals the catalog's (a Hive metastore persists them; the
-    default in-memory catalog lives with the process) — a deployment seam,
-    not an engine property.
+    Each ``*_rel`` is a SQL relation over one table's live files
+    (``ParquetTable.sql_relation``): a permanent view is SQL text and
+    cannot resolve a manifest itself, so it names the leaves that were
+    live when it was registered. The views are therefore exact from
+    registration until the next commit to their tables — ``run_batch``
+    re-registers them after its merges, so they are exact after every
+    run. Durability across restarts equals the catalog's (a Hive
+    metastore persists them; the default in-memory catalog lives with the
+    process) — a deployment seam, not an engine property.
     """
     spark.sql(
         f"""CREATE OR REPLACE VIEW vw_load_audit_summary AS
@@ -76,7 +80,7 @@ def register_durable_views(
                SUM(rows_loaded) AS total_rows_loaded,
                SUM(errors_seen) AS total_errors_seen,
                MAX(load_ts) AS latest_load_ts
-        FROM parquet.`{audit_path}`
+        FROM {audit_rel}
         GROUP BY file_type, load_status"""
     )
     spark.sql(
@@ -84,14 +88,14 @@ def register_durable_views(
         SELECT client_id, source_system, COUNT(1) AS txn_count,
                SUM(IF(is_valid, 1, 0)) AS valid_txn_count,
                SUM(IF(NOT is_valid, 1, 0)) AS invalid_txn_count
-        FROM parquet.`{can_txn_path}`
+        FROM {can_txn_rel}
         GROUP BY client_id, source_system"""
     )
     spark.sql(
         f"""CREATE OR REPLACE VIEW vw_anomaly_counts AS
         SELECT client_id, source_system, anomaly_code,
                COUNT(1) AS anomaly_count
-        FROM parquet.`{anomaly_path}`
+        FROM {anomaly_rel}
         GROUP BY client_id, source_system, anomaly_code"""
     )
 

@@ -216,7 +216,7 @@ def stream_live_scd2(spark, sf_dir):
     four micro-batches) through the persisted Scd2Sink — per trigger the
     sink restricts the version table to the batch's keys, re-collapses
     with scd2_build, and folds back via merge_upsert into an atomic
-    parquet swap (streaming/scd2_stream.py). The resulting version table
+    table commit (streaming/scd2_stream.py). The resulting version table
     hash-matches the one-shot batch SCD2 oracle, proving the incremental
     fold's state converges to the batch truth. Fresh state + checkpoint
     per call (the fold itself is the measured work); the sliced source
@@ -530,10 +530,7 @@ def ns_stream_live_sinks(spark, sf_dir):
     bucket-scoped folds — per-trigger I/O proportional to the batch's
     bucket footprint, with the additive folds (feature counts, chunk
     doc-freq) ledger-guarded per bucket — and the resulting state is
-    hash-certified against the batch oracle. The CDC pair of state tables
-    runs on the manifest (object-store) commit protocol while the other
-    sinks use the rename layout, so the drain certifies both physical
-    protocols in one hash.
+    hash-certified against the batch oracle.
 
     This probe runs at STEADY-STATE bucket counts by design (VERDICT r14
     next-step #1): it is the per-round regression signal for each sink's
@@ -541,7 +538,6 @@ def ns_stream_live_sinks(spark, sf_dir):
     work. The forced mid-drain auto-rebucket crossing (and its
     64-bucket-tiny-file aftermath) lives in its own probe,
     :func:`ns_stream_rebucket_drain`, timed and certified separately."""
-    from ..operators.manifest import ManifestTable
     from ..operators.merge import PART_COL
     from ..operators.storage import ParquetTable
     from ..streaming.chunk_freq_stream import CdcChunkSink, stream_cdc_chunks
@@ -564,17 +560,8 @@ def ns_stream_live_sinks(spark, sf_dir):
     sig_t = _bucketed("sigs")
     pairs_t = _bucketed("pairs")
     feat_t = _bucketed("features")
-    # the CDC pair runs on the OBJECT-STORE commit protocol (manifest PUT,
-    # zero directory renames — operators/manifest.py) while the other
-    # sinks stay on the rename layout: the one drain hash-certifies BOTH
-    # physical commit protocols cross-engine (the manifest side's
-    # mid-drain auto-rebucket is ns_stream_rebucket_drain's job)
-    chunk_t = ManifestTable(
-        work + "/chunks", partition_by=[PART_COL], n_buckets=8
-    )
-    cfreq_t = ManifestTable(
-        work + "/chunk_freq", partition_by=[PART_COL], n_buckets=8
-    )
+    chunk_t = _bucketed("chunks")
+    cfreq_t = _bucketed("chunk_freq")
     index_t = _bucketed("ivf_index")
     cents_t = ParquetTable(work + "/ivf_cents")
     cents_t.overwrite_atomic(
@@ -658,8 +645,7 @@ def ns_stream_rebucket_drain(spark, sf_dir):
     economics stay a clean regression signal).
 
     One CDC chunk-frequency drain (``CdcChunkSink``, the ledgered additive
-    fold) on the manifest (object-store) commit protocol, with a
-    deliberately tiny split target that FORCES both its state tables
+    fold), with a deliberately tiny split target that FORCES both its state tables
     across an auto-rebucket mid-drain (8 -> capped 64 buckets; asserted to
     have occurred, or the certification claim is silently hollow). The
     post-split frequency table — ledger re-homing, manifest commits, and
@@ -667,16 +653,16 @@ def ns_stream_rebucket_drain(spark, sf_dir):
     whole-corpus batch truth. The probe's own bench timing is the priced
     cost of the rebucket crossing, reported separately from the
     steady-state drain."""
-    from ..operators.manifest import ManifestTable
     from ..operators.merge import PART_COL
+    from ..operators.storage import ParquetTable
     from ..streaming.chunk_freq_stream import CdcChunkSink, stream_cdc_chunks
 
     src = _doc_slices(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="fincan_rebucket_drain_")
-    chunk_t = ManifestTable(
+    chunk_t = ParquetTable(
         work + "/chunks", partition_by=[PART_COL], n_buckets=8
     )
-    cfreq_t = ManifestTable(
+    cfreq_t = ParquetTable(
         work + "/chunk_freq", partition_by=[PART_COL], n_buckets=8
     )
     q = stream_cdc_chunks(

@@ -73,11 +73,12 @@ class PipelineConfig:
     # sql/07_ops_views.sql creates durable views, not session temp views)
     durable_views: bool = False
     # scheduled-maintenance vacuum: when not None, every run_batch first
-    # sweeps crash-stranded .tmp-*/.old-* swap directories (and surplus
-    # .gen-* snapshots) older than this many seconds from ALL pipeline
-    # tables — a long-lived deployment otherwise accumulates disk from
-    # interrupted atomic swaps. Age-gating protects any swap in flight;
-    # None (default) leaves maintenance to an external schedule.
+    # runs ParquetTable.vacuum on ALL pipeline tables — unreferenced
+    # generations of crashed writes, stray manifest temp files and
+    # snapshots past keep_generations older than this many seconds go (a
+    # long-lived deployment otherwise accumulates disk from interrupted
+    # writes). Age-gating protects any write in flight; None (default)
+    # leaves maintenance to an external schedule.
     vacuum_min_age_seconds: float | None = None
 
 
@@ -198,17 +199,12 @@ class Pipeline:
         ]
 
     def vacuum(self) -> list[str]:
-        """Sweep crash-stranded swap directories from every pipeline table
-        (operators.storage.vacuum); no-op unless
+        """``ParquetTable.vacuum`` on every pipeline table; no-op unless
         ``cfg.vacuum_min_age_seconds`` is set. Returns deleted paths."""
-        if self.cfg.vacuum_min_age_seconds is None:
+        age = self.cfg.vacuum_min_age_seconds
+        if age is None:
             return []
-        from ..operators.storage import vacuum as _vacuum
-
-        deleted: list[str] = []
-        for t in self._tables():
-            deleted.extend(_vacuum(t, self.cfg.vacuum_min_age_seconds))
-        return deleted
+        return [p for t in self._tables() for p in t.vacuum(age)]
 
     # ------------------------------------------------------------------
     def run_batch(self) -> dict:
@@ -300,9 +296,9 @@ class Pipeline:
         if self.cfg.durable_views:
             register_durable_views(
                 self.spark,
-                self.raw_load_audit.path,
-                self.can_txn.path,
-                self.can_txn_anomaly.path,
+                self.raw_load_audit.sql_relation(),
+                self.can_txn.sql_relation(),
+                self.can_txn_anomaly.sql_relation(),
             )
         result = {
             "smoke_counts": smoke_counts(can_txn_df, can_line_df, anomaly_df),

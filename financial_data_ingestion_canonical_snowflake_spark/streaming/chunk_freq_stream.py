@@ -28,7 +28,7 @@ see below). So this sink folds each micro-batch into two persisted tables:
   replays, so the fold is ledger-guarded PER BUCKET (merge.LedgerSpec:
   one sentinel row, ``chunk_hash = -1``, doc_freq = last applied
   batch_id; real hashes are md5-derived 60-bit non-negatives), each
-  swapping atomically with its bucket's counts, so a crash mid-swap
+  committing atomically with its bucket's counts, so a crash mid-commit
   replays only the buckets that didn't land.
 
 Both tables are hash-bucketed (``merge.adopt_scoped_layout``: a table

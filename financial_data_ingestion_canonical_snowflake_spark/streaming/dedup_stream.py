@@ -23,7 +23,7 @@ is the 1-bucket case (``merge.adopt_scoped_layout``). Each bucket carries
 a replay ledger (sentinel ``content_hash = '__ledger__'`` row inside the
 bucket partition, ``merge.LedgerSpec``), so the additive ``dup_cnt`` is
 exactly-once per bucket under foreachBatch replay, including a crash
-between the table swap and the checkpoint commit. Read survivors through
+between the table commit and the checkpoint commit. Read survivors through
 ``table.read`` or :meth:`ExactDedupSink.survivors` (both exclude the
 sentinel rows).
 """

@@ -16,8 +16,8 @@ double-counts a replayed delivery, so the table is hash-bucketed
 the 1-bucket case) and each bucket keeps an applied-batch ledger as a
 SENTINEL ROW inside its partition (``bucket = -1``, cnt = last applied
 batch_id — real buckets are md5 % 2**hash_bits, never negative;
-merge.LedgerSpec). The ledger swaps atomically WITH its bucket's counts,
-so a crash mid-swap replays only the buckets that didn't land, and a
+merge.LedgerSpec). The ledger commits atomically WITH its bucket's counts,
+so a crash mid-commit replays only the buckets that didn't land, and a
 replayed ``batch_id <= ledger`` is skipped. Restart/replay equality is
 pytest-proven in tests/test_streaming_importance.py.
 

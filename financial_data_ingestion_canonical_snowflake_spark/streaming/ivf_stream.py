@@ -67,17 +67,12 @@ class IvfIndexSink:
 
     CONCURRENT-READER CONTRACT: this is the one sink whose table SERVES
     queries (``ivf_topk_from_index``) while the stream keeps committing.
-    On a :class:`~..operators.manifest.ManifestTable` with
-    ``keep_generations=0`` the commit's own GC deletes displaced leaves
-    immediately, so a reader that planned against the pre-commit manifest
-    can lose the race with the delete mid-collect. The constructor
-    therefore bumps a manifest-backed index table to ``keep_generations=1``
+    With ``keep_generations=0`` the commit's own GC deletes displaced
+    leaves immediately, so a reader that planned against the pre-commit
+    manifest can lose the race with the delete mid-collect. The
+    constructor therefore bumps the index table to ``keep_generations=1``
     (one displaced snapshot retained = lock-free snapshot isolation for
-    in-flight readers; ``vacuum`` prunes past it). ``ParquetTable`` keeps
-    its loud single-writer/reader-retry contract
-    (``storage.py::_restore_orphaned_old``) — readers there get retryable
-    failures, never corruption, and deployments wanting lock-free reads
-    should hand this sink a ``ManifestTable``. Pinned by
+    in-flight readers; ``vacuum`` prunes past it). Pinned by
     ``tests/test_manifest_table.py::test_reader_during_commit_snapshot``.
     """
 
@@ -92,15 +87,9 @@ class IvfIndexSink:
         adopt_scoped_layout(index_table)
         if index_table.schema is None:
             index_table.schema = _index_schema(id_col, vec_col)
-        from ..operators.manifest import ManifestTable
-
-        if (
-            isinstance(index_table, ManifestTable)
-            and index_table.keep_generations < 1
-        ):
-            # serve-path default: retain one displaced snapshot so queries
-            # in flight during a trigger's commit keep a readable plan
-            index_table.keep_generations = 1
+        # serve-path default: retain one displaced snapshot so queries in
+        # flight during a trigger's commit keep a readable plan
+        index_table.keep_generations = max(index_table.keep_generations, 1)
         self.index_table = index_table
         self.centroids_table = centroids_table
         self.id_col = id_col

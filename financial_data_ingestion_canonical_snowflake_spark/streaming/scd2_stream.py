@@ -181,9 +181,8 @@ class Scd2Sink:
             # declared-schema read would project away the sink's internal
             # hwm_us/hwm_seq columns and silently disable late-event
             # detection forever (has_hwm below would never be True), and
-            # the seam keeps this sink correct on a manifest-committed
-            # layout (a raw path read there would scan unreferenced
-            # generation directories)
+            # a raw path read would scan unreferenced generation
+            # directories
             meta = self.table.read_meta()
             stored = (
                 T.StructType.fromJson(meta["schema_json"])

@@ -1264,3 +1264,26 @@ def test_adaptive_prefix_bits_boundaries():
     assert adaptive_prefix_bits(131_073) == 10
     assert adaptive_prefix_bits(500_000) == 11
     assert adaptive_prefix_bits(10**12) == 24    # clamp ceiling
+
+
+def test_capped_postings_drops_over_cap_null_group_in_both_shapes(spark):
+    """A NULL posting key is one group in both cap shapes: ``cap + 1``
+    NULL-key postings are over the cap and dropped by the window count
+    AND by the guard's anti-join (which must match NULL against the hot
+    set NULL-safely); an at-cap NULL group survives both."""
+    from financial_data_ingestion_canonical_snowflake_spark.operators.text_dedup import (
+        _capped_postings,
+    )
+
+    cap = 3
+    for n_null, want_nulls in ((cap + 1, 0), (cap, cap)):
+        rows = [(None, d) for d in range(n_null)] + [("k", 100), ("k", 101)]
+        df = spark.createDataFrame(rows, "shingle string, doc long")
+        shapes = [
+            sorted(map(tuple, _capped_postings(df, "shingle", cap, g).collect()), key=repr)
+            for g in (False, True)
+        ]
+        spark.catalog.clearCache()
+        assert shapes[0] == shapes[1]
+        assert sum(r[0] is None for r in shapes[1]) == want_nulls
+        assert [r for r in shapes[1] if r[0] == "k"] == [("k", 100), ("k", 101)]

@@ -98,7 +98,7 @@ def test_scoped_merge_prunes_target_scan(spark, table):
     # verify the partition filter reaches the file scan
     src = _df(spark, [("k7", 7, "d")]).withColumn(PART_COL, part_expr("k", 8))
     parts = [r[0] for r in src.select(PART_COL).distinct().collect()]
-    tgt = spark.read.parquet(table.path).filter(F.col(PART_COL).isin(parts))
+    tgt = table.scan(spark).filter(F.col(PART_COL).isin(parts))
     plan = tgt._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and PART_COL in plan.split("PartitionFilters", 1)[1][:200]
 
@@ -113,21 +113,8 @@ def test_scoped_merge_first_batch_creates_table(spark, table):
     assert table.read(spark).columns == ["k", "v", "created_from"]
 
 
-def test_exists_requires_parquet_data_file(tmp_path):
-    p = tmp_path / "t"
-    p.mkdir()
-    t = ParquetTable(str(p), SCHEMA)
-    assert not t.exists()
-    (p / "_SUCCESS").touch()
-    assert not t.exists()  # marker alone is not a table
-    sub = p / f"{PART_COL}=3"
-    sub.mkdir()
-    (sub / "part-000.parquet").touch()
-    assert t.exists()  # nested data file found recursively
-
-
 def test_scoped_merge_rejects_changed_bucket_modulus(spark, table, tmp_path):
-    """The bucket modulus is persisted in _fincan_meta.json on first scoped
+    """The bucket modulus is persisted in the table metadata on first scoped
     write. An EXPLICIT mismatching n_buckets argument must fail loudly
     instead of pruning to the wrong buckets and duplicating keys (ADVICE
     r2 medium). A table OBJECT constructed with a different seed value is
@@ -155,28 +142,12 @@ def test_scoped_merge_legacy_table_directory_check(spark, table):
     """A table written before metadata existed: observed txn_part= dirs must
     fit the claimed modulus (weak check), then the table is stamped."""
     merge_upsert_scoped(spark, table, _df(spark, [(f"k{i}", i, "a") for i in range(64)]), keys=["k"])
-    os.remove(os.path.join(table.path, "_fincan_meta.json"))
+    table.write_meta()  # metadata without a recorded modulus
     too_small = ParquetTable(table.path, SCHEMA, [PART_COL], n_buckets=2)
     with pytest.raises(ValueError, match="exceeds claimed"):
         merge_upsert_scoped(spark, too_small, _df(spark, [("k1", 9, "b")]), keys=["k"])
     merge_upsert_scoped(spark, table, _df(spark, [("k1", 9, "b")]), keys=["k"])
     assert table.read_meta()["n_buckets"] == 8  # re-stamped
-
-
-def test_replace_partitions_leaves_no_stray_dirs_in_root(spark, table):
-    """Displaced old partition dirs are parked OUTSIDE the table root during
-    the swap — a '<part>.old-*' name inside the root would be parsed by
-    partition discovery as a partition VALUE (ADVICE r2)."""
-    merge_upsert_scoped(spark, table, _df(spark, [(f"k{i}", i, "a") for i in range(64)]), keys=["k"])
-    merge_upsert_scoped(spark, table, _df(spark, [(f"k{i}", -i, "b") for i in range(64)]), keys=["k"])
-    strays = [
-        d for d in os.listdir(table.path)
-        if not d.startswith(f"{PART_COL}=") and d != "_fincan_meta.json" and not d.startswith("_")
-    ]
-    assert strays == []
-    # partition column still reads back as a clean int bucket set
-    vals = {r[0] for r in spark.read.parquet(table.path).select(PART_COL).distinct().collect()}
-    assert all(isinstance(v, int) and 0 <= v < 8 for v in vals)
 
 
 def test_ledger_survives_caller_parts_superset(spark, tmp_path):
@@ -217,7 +188,7 @@ def test_ledger_survives_caller_parts_superset(spark, tmp_path):
 
     # every bucket still holds exactly one sentinel; only k7's bucket
     # advanced to batch 1, the superset-only buckets kept applied=0
-    raw = spark.read.parquet(table.path)
+    raw = table.scan(spark)
     sent = {
         r[PART_COL]: r["v"]
         for r in raw.filter(F.col("k") == "__led__").collect()
@@ -246,63 +217,33 @@ def test_ledger_survives_caller_parts_superset(spark, tmp_path):
     )
 
 
-def test_exists_restores_orphaned_old_generation(spark, table):
-    """ADVICE r13 (low): a crash between overwrite_atomic's two renames
-    leaves the table path absent and the previous generation parked as
-    an ``.old-*`` sibling — exists() must restore it (one-batch replay)
-    instead of reporting a fresh table (full state + ledger loss)."""
-    merge_upsert_scoped(
-        spark, table, _df(spark, [("a", 1, "s1"), ("b", 2, "s1")]), keys=["k"]
-    )
-    assert table.exists()
-    # simulate the crash instant: live dir renamed away, tmp never landed
-    os.rename(table.path, f"{table.path}.old-deadbeef")
-    assert not os.path.isdir(table.path)
-    assert table.exists()  # restored, not absent
-    got = {r["k"]: r["v"] for r in table.read(spark).collect()}
-    assert got == {"a": 1, "b": 2}
-    # a genuinely fresh table (no orphan) still reads as absent
-    fresh = ParquetTable(
-        table.path + "_nope", SCHEMA, [PART_COL], n_buckets=8
-    )
-    assert not fresh.exists()
-
-
-def test_staged_merge_abort_and_ordered_commit(spark, table, tmp_path):
+def test_staged_merge_abort_and_ordered_commit(spark, table):
     """r16: merge_upsert_scoped(stage_only=True) runs the write job but
     publishes NOTHING until commit(); abort() discards the staged files
     with the table bit-untouched — the invariants the multi-table sinks'
-    overlapped staging + ordered commits are built on. Checked on both
-    physical layouts (rename swap and manifest PUT)."""
-    from financial_data_ingestion_canonical_snowflake_spark.operators.manifest import (
-        ManifestTable,
+    overlapped staging + ordered commits are built on."""
+    t = table
+    merge_upsert_scoped(
+        spark, t, _df(spark, [("a", 1, "s1"), ("b", 2, "s1")]), keys=["k"]
     )
-
-    for t in (
-        table,
-        ManifestTable(str(tmp_path / "mtbl"), SCHEMA, [PART_COL], n_buckets=8),
-    ):
-        merge_upsert_scoped(
-            spark, t, _df(spark, [("a", 1, "s1"), ("b", 2, "s1")]), keys=["k"]
-        )
-        before = _snapshot(t.path)
-        upd = _df(spark, [("a", 99, "s2"), ("c", 3, "s2")])
-        # stage + abort: write job ran, table identical byte-for-byte
-        staged = merge_upsert_scoped(spark, t, upd, keys=["k"], stage_only=True)
-        staged.abort()
-        assert _snapshot(t.path) == before
-        assert {r["k"]: r["v"] for r in t.read(spark).collect()} == {
-            "a": 1,
-            "b": 2,
-        }
-        # stage + commit == the inline merge
-        staged = merge_upsert_scoped(spark, t, upd, keys=["k"], stage_only=True)
-        staged.commit()
-        assert {r["k"]: r["v"] for r in t.read(spark).collect()} == {
-            "a": 99,
-            "b": 2,
-            "c": 3,
-        }
+    before = _snapshot(t.path)
+    upd = _df(spark, [("a", 99, "s2"), ("c", 3, "s2")])
+    # stage + abort: write job ran, table identical byte-for-byte
+    staged = merge_upsert_scoped(spark, t, upd, keys=["k"], stage_only=True)
+    staged.abort()
+    assert _snapshot(t.path) == before
+    assert {r["k"]: r["v"] for r in t.read(spark).collect()} == {
+        "a": 1,
+        "b": 2,
+    }
+    # stage + commit == the inline merge
+    staged = merge_upsert_scoped(spark, t, upd, keys=["k"], stage_only=True)
+    staged.commit()
+    assert {r["k"]: r["v"] for r in t.read(spark).collect()} == {
+        "a": 99,
+        "b": 2,
+        "c": 3,
+    }
 
 
 def test_replace_keys_equals_merge(spark, table):

@@ -1,13 +1,11 @@
 """Hive-partitioned tables (operators/storage.py): partition pruning must
 reach the scan, non-partition predicates must push down to parquet, and
-dynamic-partition overwrite must touch only the partitions in the batch.
+partition replacement must touch only the partitions in the batch.
 
 These are the plan-level guarantees that make a 100 TB date/client
 partitioned layout cheap to query and to refresh incrementally."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -58,7 +56,7 @@ def test_dynamic_overwrite_touches_only_batch_partitions(spark, events_parted, t
               t.read(spark).groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt")).collect()}
     # rewrite ONE partition with a halved batch
     clicks = full.filter(F.col("event_type") == "click").filter(F.col("user_id") < 75)
-    t.overwrite_partitions(clicks)
+    t.replace_partitions(clicks)
     after = {r.event_type: r.cnt for r in
              t.read(spark).groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt")).collect()}
     assert after["click"] < before["click"]
@@ -68,5 +66,5 @@ def test_dynamic_overwrite_touches_only_batch_partitions(spark, events_parted, t
 
 
 def test_partition_directories_on_disk(events_parted):
-    subdirs = {d for d in os.listdir(events_parted.path) if d.startswith("event_type=")}
+    subdirs = {d for d in events_parted.partition_dir_names() if d.startswith("event_type=")}
     assert len(subdirs) >= 3  # click / view / error / ...

@@ -297,11 +297,11 @@ def test_idempotency_and_incremental(spark, fixture_root, tmp_path_factory):
 
 
 def test_vacuum_removes_crash_stranded_swap_dirs(spark, fixture_root, tmp_path_factory):
-    """A crash mid-swap strands a `.tmp-*` (half-written candidate) or
-    `.old-*` (displaced version) directory next to the table root. With
-    cfg.vacuum_min_age_seconds set, the NEXT run_batch sweeps them before
-    ingesting — the wired-in maintenance analog of Delta VACUUM — and the
-    batch's results are unaffected."""
+    """A crashed write strands an unreferenced generation directory (data
+    written, manifest never PUT) or a `_MANIFEST.json.w-*` temp file (PUT
+    interrupted). With cfg.vacuum_min_age_seconds set, the NEXT run_batch
+    sweeps them before ingesting — the wired-in maintenance analog of
+    Delta VACUUM — and the batch's results are unaffected."""
     import os
 
     wh = str(tmp_path_factory.mktemp("warehouse_vac"))
@@ -314,13 +314,15 @@ def test_vacuum_removes_crash_stranded_swap_dirs(spark, fixture_root, tmp_path_f
     assert r1["vacuumed"] == []  # nothing stranded on a fresh warehouse
     n_txn = pipe.can_txn.read(spark).count()
 
-    # simulate a crashed swap: stranded candidate + displaced-version dirs
-    stray_tmp = pipe.can_txn.path + ".tmp-deadbeef"
-    stray_old = pipe.can_txn_line.path + ".old-cafef00d"
-    for d in (stray_tmp, stray_old):
-        os.makedirs(d)
-        with open(os.path.join(d, "part-orphan.parquet"), "w") as f:
-            f.write("x")
+    # simulate crashed writes: a task-written generation nothing
+    # references + a manifest temp file whose PUT never happened
+    stray_tmp = os.path.join(pipe.can_txn.path, "data", "__gen=99999999-deadbeef")
+    stray_old = os.path.join(pipe.can_txn_line.path, "_MANIFEST.json.w-cafef00d")
+    os.makedirs(os.path.join(stray_tmp, "_temporary"))
+    with open(os.path.join(stray_tmp, "_temporary", "part-orphan.parquet"), "w") as f:
+        f.write("x")
+    with open(stray_old, "w") as f:
+        f.write("{}")
     # age past the gate (min_age 0 still requires mtime strictly in the past)
     past = 1_000_000_000
     for d in (stray_tmp, stray_old):
@@ -339,11 +341,14 @@ def test_vacuum_removes_crash_stranded_swap_dirs(spark, fixture_root, tmp_path_f
     assert pipe2.can_txn.read(spark).count() == n_txn  # results unaffected
 
     # default config leaves maintenance off: stray survives a plain run
-    os.makedirs(stray_tmp)
-    os.utime(stray_tmp, (past, past))
+    # (a manifest temp file: each commit's own GC already collects
+    # unreferenced generations)
+    with open(stray_old, "w") as f:
+        f.write("{}")
+    os.utime(stray_old, (past, past))
     pipe3 = Pipeline(
         spark,
         PipelineConfig(ingest_root=fixture_root, warehouse=wh, batch_ts=TS2),
     )
     r3 = pipe3.run_batch()
-    assert r3["vacuumed"] == [] and os.path.exists(stray_tmp)
+    assert r3["vacuumed"] == [] and os.path.exists(stray_old)

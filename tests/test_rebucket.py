@@ -67,7 +67,7 @@ def _ledgers(spark, table) -> dict[int, int]:
     """bucket -> applied batch id, straight off the sentinel rows."""
     return {
         r[0]: r[1]
-        for r in spark.read.parquet(table.path)
+        for r in table.scan(spark)
         .filter(F.col("content_hash") == LEDGER_HASH)
         .select(PART_COL, "dup_cnt")
         .collect()
@@ -95,7 +95,7 @@ def test_rebucket_preserves_state_and_rehomes_ledgers(spark, tmp_path):
 
     # every data row sits in the directory the NEW modulus assigns it
     misplaced = (
-        spark.read.parquet(table.path)
+        table.scan(spark)
         .filter(F.col("content_hash") != LEDGER_HASH)
         .filter(F.col(PART_COL) != part_expr("content_hash", 16))
         .count()

@@ -247,7 +247,7 @@ def test_observed_audit_lands_per_batch(spark, events_dir, tmp_path):
         while time.time() < deadline:
             try:
                 if audit.exists():
-                    rows = spark.read.parquet(audit.path).collect()
+                    rows = audit.read(spark).collect()
                     if sum(r.rows_parsed for r in rows) >= want:
                         break
             except Exception:
@@ -475,7 +475,7 @@ def test_stream_full_canonical_chain_matches_batch(spark, tmp_path):
     # replay idempotency: re-running the whole raw dir as one batch through
     # the sink changes none of the three tables
     sink = FullCanonicalSink(txn, line, anom, source_system="JSON", batch_ts=batch_ts)
-    sink(spark.read.parquet(pipe.raw_tables["JSON"].path), batch_id=99)
+    sink(pipe.raw_tables["JSON"].read(spark), batch_id=99)
     assert sorted(map(tuple, txn.read(spark).collect())) == want_txn
     assert sorted(map(tuple, line.read(spark).collect())) == want_line
     assert sorted(map(tuple, anom.read(spark).collect())) == want_anom

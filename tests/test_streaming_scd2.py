@@ -273,14 +273,11 @@ def test_scd2_sink_on_manifest_table(spark, tmp_path):
     protocol: bucket-pruned target reads resolve the manifest's live
     leaves (a raw path read would scan unreferenced generations), folds
     land via manifest PUTs, and replay stays idempotent."""
-    from financial_data_ingestion_canonical_snowflake_spark.operators.manifest import (
-        ManifestTable,
-    )
     from financial_data_ingestion_canonical_snowflake_spark.operators.merge import (
         PART_COL,
     )
 
-    table = ManifestTable(
+    table = ParquetTable(
         str(tmp_path / "scd2_m"), partition_by=[PART_COL], n_buckets=4
     )
     sink = Scd2Sink(table, "user_id", "event_type", "ts", "event_id")

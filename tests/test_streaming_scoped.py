@@ -90,7 +90,7 @@ def _assert_untouched_buckets_identical(
     }
     assert changed, "the trigger was expected to rewrite something"
     for p in changed:
-        bucket = p.split(os.sep, 1)[0]
+        bucket = _bucket_of(p)
         assert bucket in touched_rel, (
             f"file {p} changed outside the touched buckets {touched_rel}"
         )
@@ -102,10 +102,15 @@ def _bucketed(tmp_path, name, n_buckets=8) -> ParquetTable:
     )
 
 
+def _bucket_of(rel_path: str) -> str:
+    """The ``txn_part=`` component of a data file's path in the table."""
+    return next(c for c in rel_path.split(os.sep) if c.startswith(f"{PART_COL}="))
+
+
 def _touched(table_path: str, before: dict[str, str]) -> set[str]:
     after = _snapshot(table_path)
     return {
-        p.split(os.sep, 1)[0]
+        _bucket_of(p)
         for p in set(before) | set(after)
         if before.get(p) != after.get(p)
     }

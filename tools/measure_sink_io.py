@@ -201,118 +201,6 @@ def growth_main() -> None:
     spark.stop()
 
 
-def _all_file_bytes(root: str, suffix: str) -> int:
-    total = 0
-    for r, _d, fs in os.walk(root):
-        for f in fs:
-            if f.endswith(suffix):
-                total += os.path.getsize(os.path.join(r, f))
-    return total
-
-
-def protocol_main() -> None:
-    """``--protocol``: the rename commit (ParquetTable) vs the manifest PUT
-    commit (ManifestTable) on the identical steady-state scoped workload —
-    per-increment parquet write bytes, commit-metadata bytes, and wall
-    seconds. Quantifies the round-14 claim that the object-store protocol
-    costs nothing on the data path: parquet I/O should be identical
-    (same scoped merge plan lands in both layouts) and the protocol delta
-    should be confined to small JSON commit objects.
-
-    Run:  python tools/measure_sink_io.py --protocol [sf_dir] [n_incr] [inc_rows] [n_buckets]
-    """
-    import time
-
-    from financial_data_ingestion_canonical_snowflake_spark.operators.manifest import (
-        ManifestTable,
-    )
-
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    sf_dir = args[0] if args else "/tmp/testdata/sf1"
-    n_incr = int(args[1]) if len(args) > 1 else 6
-    inc_rows = int(args[2]) if len(args) > 2 else 100
-    n_buckets = int(args[3]) if len(args) > 3 else 64
-    spark = get_spark(app_name="sink-io-protocol", shuffle_partitions=16)
-    spark.sparkContext.setLogLevel("ERROR")
-    docs = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") < 50_000)
-        .persist()
-    )
-    n = docs.count()
-    batches = _seed_plus_increments(docs, "doc_id", n, n_incr, inc_rows)
-    work = tempfile.mkdtemp(prefix="sink_io_proto_")
-
-    report = {}
-    for proto, mk in (
-        (
-            "rename",
-            lambda: ParquetTable(
-                f"{work}/rn", partition_by=[PART_COL], n_buckets=n_buckets
-            ),
-        ),
-        (
-            "manifest",
-            lambda: ManifestTable(
-                f"{work}/mf", partition_by=[PART_COL], n_buckets=n_buckets
-            ),
-        ),
-    ):
-        table = mk()
-        sink = ExactDedupSink(table, "doc_id", "text")
-        rows = []
-        for i, b in enumerate(batches):
-            before = _files(table.path) if os.path.isdir(table.path) else {}
-            meta_before = _all_file_bytes(table.path, ".json") if os.path.isdir(table.path) else 0
-            t0 = time.perf_counter()
-            sink(b, i)
-            wall = time.perf_counter() - t0
-            # the pointer object is REWRITTEN whole each commit — its full
-            # size (not the growth delta) is the per-commit PUT volume,
-            # and the number that scales with layout width (leaf count),
-            # not with the trigger's delta. This is the dir-granular
-            # manifest's scaling seam (VERDICT r14 next-step #4).
-            mpath = os.path.join(table.path, "_MANIFEST.json")
-            rows.append(
-                {
-                    "parquet_mb": round(
-                        _written_bytes(before, _files(table.path)) / 1e6, 3
-                    ),
-                    "commit_json_b": _all_file_bytes(table.path, ".json")
-                    - meta_before,
-                    "manifest_obj_b": (
-                        os.path.getsize(mpath) if os.path.isfile(mpath) else 0
-                    ),
-                    "wall_s": round(wall, 2),
-                }
-            )
-        report[proto] = {
-            "triggers": rows,
-            "final_state_mb": round(
-                sum(sz for sz, _m in _files(table.path).values()) / 1e6, 2
-            ),
-            "final_files": len(_files(table.path)),
-        }
-    print(json.dumps({
-        "mode": "protocol", "sf_dir": sf_dir, "docs": n,
-        "n_incr": n_incr, "inc_rows": inc_rows, "n_buckets": n_buckets,
-        "report": report,
-    }, indent=1))
-    # headline: mean increment-trigger numbers (trigger 0 is the seed)
-    for proto, r in report.items():
-        inc = r["triggers"][1:]
-        mean = lambda k: sum(t[k] for t in inc) / max(len(inc), 1)  # noqa: E731
-        print(
-            f"{proto:9s} mean increment: parquet {mean('parquet_mb'):.3f} MB, "
-            f"commit-json {mean('commit_json_b'):.0f} B, "
-            f"manifest-PUT {mean('manifest_obj_b'):.0f} B, "
-            f"wall {mean('wall_s'):.2f} s; "
-            f"final state {r['final_state_mb']} MB in {r['final_files']} files"
-        )
-    spark.stop()
-
-
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/testdata/sf1"
     n_incr = int(sys.argv[2]) if len(sys.argv) > 2 else 4
@@ -376,7 +264,5 @@ def main() -> None:
 if __name__ == "__main__":
     if "--growth" in sys.argv:
         growth_main()
-    elif "--protocol" in sys.argv:
-        protocol_main()
     else:
         main()
